@@ -630,11 +630,6 @@ def encoded_sizes_flat(flat: np.ndarray, lens: np.ndarray, mode: str
     return per_row
 
 
-def encoded_sizes(arrs: list[np.ndarray], mode: str) -> np.ndarray:
-    flat, lens = _concat_rows(arrs)
-    return encoded_sizes_flat(flat, lens, mode)
-
-
 def payload_bytes_from_widths(lens: np.ndarray, widths_flat: np.ndarray
                               ) -> np.ndarray:
     """Per-row payload byte counts reconstructed from row lengths + the flat

@@ -13,15 +13,19 @@ Spark-first design (SURVEY.md §1.4, §4):
   BEFORE the shuffle, so a single 10M-token document cannot straggle a task.
   Blocks are independent given per-block inits (SURVEY.md §3.2), so segment
   encodes are bit-compatible with whole-row encodes;
-* decode reassembly is a declarative ``groupBy(doc_id) → array_sort →
-  flatten`` that Catalyst plans as one shuffle; it is skipped when the
-  caller knows no row exceeded the split threshold;
+* decode reassembly shuffles the COMPRESSED segments by doc_id and
+  concatenates them after the decode (``_decode_reassembled``); it is
+  skipped when no doc was split.  The decoded-array ``groupBy(doc_id) →
+  array_sort → flatten`` lives only in :func:`reassemble_segments`, for
+  :func:`decode_files` consumers;
 * metrics are plain DataFrame aggregations over the encoded output plus
   per-task encode timings carried as constant batch columns — queryable,
   not log-scraped.
 
-Schema of the encoded table:
-    doc_id, source, seg_id, n_tok, codec, widths, inits, payload, pid, enc_ns
+Schema of the encoded table (``ENCODED_SCHEMA``), written only by
+``_write_encoded`` and read only through ``_EncodedBatch``:
+    doc_id, source, seg_id, n_tok, codec, widths, inits, payload, pid,
+    enc_ns, content_hash
 """
 
 from __future__ import annotations
@@ -29,6 +33,7 @@ from __future__ import annotations
 import os
 import tempfile
 import time
+from functools import cached_property
 
 import numpy as np
 import pyarrow as pa
@@ -37,6 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import blocks, codecs
 from .codecs.auto import choose_codec_flat
+from .codecs.base import extract_rows
+from .kernels import content_hash_flat, multi_arange
 
 ENCODED_SCHEMA = ("doc_id string, source string, seg_id int, n_tok int, "
                   "codec string, widths binary, inits binary, payload binary, "
@@ -124,7 +131,8 @@ def get_spark(app: str = "simdcomp_spark", cores: int | None = None,
 # ---------------------------------------------------------------------------
 
 def _list_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """list<int32> column → (flat int32 values in row order, row lengths).
+    """list<int32> tokens column → (flat uint32 values in row order, row
+    lengths) — the one token reader of every encode path.
 
     The offsets are read straight from the Arrow buffer:
     ``col.offsets.to_numpy()`` routes through the masked-array conversion
@@ -133,15 +141,26 @@ def _list_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     buffer view on fresh batches in the fused scan loop.  The offset
     width follows the column type: the fused scan reads user parquet
     whose Arrow schema may restore large_list (int64 offsets) — reading
-    those as int32 would silently corrupt every row length."""
+    those as int32 would silently corrupt every row length.  A NULL row
+    or NULL element raises: numpy would turn the values into float64 and
+    the uint32 view would encode the float bits."""
     bufs = col.buffers()
     odt = np.int64 if pa.types.is_large_list(col.type) else np.int32
     off = np.frombuffer(bufs[1], dtype=odt)[
         col.offset: col.offset + len(col) + 1].astype(np.int64)
-    vals = col.values.to_numpy(zero_copy_only=False)
-    flat = vals[off[0]:off[-1]] if off.size else vals[:0]
-    lens = np.diff(off)
-    return flat, lens
+    lo, hi = (int(off[0]), int(off[-1])) if off.size else (0, 0)
+    # .values ignores the list's slice offset: null_count is O(1) on the
+    # whole child, and only a child with nulls pays for the sliced count
+    vals = col.values
+    if col.null_count or (vals.null_count
+                          and vals.slice(lo, hi - lo).null_count):
+        raise ValueError(
+            f"tokens column holds {col.null_count} NULL row(s) or NULL "
+            "elements; NULL tokens cannot be encoded")
+    if vals.type != pa.int32():
+        raise ValueError(f"tokens must be list<int32>, got {col.type}")
+    flat = vals.slice(lo, hi - lo).to_numpy(zero_copy_only=False)
+    return flat.view(np.uint32), np.diff(off)
 
 
 def _binary_to_flat(col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -188,9 +207,124 @@ def _list_from_flat(values_i32: np.ndarray, row_lens: np.ndarray) -> pa.Array:
                  type=pa.int32()))
 
 
-def _rows_view(flat: np.ndarray, lens: np.ndarray) -> list[np.ndarray]:
-    off = np.concatenate(([0], np.cumsum(lens)))
-    return [flat[off[r]:off[r + 1]] for r in range(lens.size)]
+# ---------------------------------------------------------------------------
+# the encoded format: one writer, one reader
+# ---------------------------------------------------------------------------
+
+def _write_encoded(rows, codec: str):
+    """Writer of the encoded format for one Spark task: each ``(doc_ids,
+    sources, seg_ids, flat uint32 tokens, row lengths)`` item of ``rows``
+    (ids as Arrow arrays, seg_ids int32) becomes one ``ENCODED_SCHEMA``
+    batch.  ``n_tok`` is always the row length, never a caller's column.
+    With ``codec='auto'`` the task's first batch picks the codec for all
+    of its batches; ``enc_ns`` is the task's cumulative encode time
+    (metrics take the max per pid)."""
+    from pyspark import TaskContext
+    ctx = TaskContext.get()
+    pid = ctx.partitionId() if ctx else -1
+    chosen = None if codec == "auto" else codec
+    enc_ns = 0
+    for doc_ids, sources, seg_ids, flat, lens in rows:
+        t0 = time.perf_counter_ns()
+        if chosen is None:
+            chosen, _costs = choose_codec_flat(flat, lens)
+        e = codecs.get(chosen).encode_flat(flat, lens)
+        ch = content_hash_flat(flat, lens)
+        enc_ns += time.perf_counter_ns() - t0
+        n = lens.size
+        yield pa.RecordBatch.from_arrays(
+            [doc_ids, sources, seg_ids, pa.array(lens.astype(np.int32)),
+             pa.array([chosen] * n, type=pa.string()),
+             _binary_from_flat(e.widths, e.widths_lens),
+             _binary_from_flat(e.inits, e.inits_lens),
+             _binary_from_flat(e.payload, e.payload_lens),
+             pa.array(np.full(n, pid, dtype=np.int32)),
+             pa.array(np.full(n, enc_ns, dtype=np.int64)),
+             _binary_from_flat(ch, np.full(n, 16, dtype=np.int64))],
+            names=["doc_id", "source", "seg_id", "n_tok", "codec",
+                   "widths", "inits", "payload", "pid", "enc_ns",
+                   "content_hash"])
+
+
+class _EncodedBatch:
+    """Reader of the encoded format: the ``n_tok, codec, widths, inits,
+    payload`` columns of one Arrow batch (in that order from column
+    ``first``) as numpy buffers.  ``widths``, ``inits`` and ``payload``
+    are (flat uint8 buffer, per-row byte lengths) pairs viewed zero-copy
+    over the Arrow buffers; each column is read on first use."""
+
+    def __init__(self, batch: pa.RecordBatch, first: int = 0):
+        self._col = lambda i: batch.column(first + i)
+
+    @cached_property
+    def n_tok(self) -> np.ndarray:
+        return self._col(0).to_numpy(zero_copy_only=False).astype(np.int64)
+
+    @cached_property
+    def names(self) -> list[str]:
+        """The distinct codec names of the batch."""
+        return self._col(1).unique().to_pylist()
+
+    @cached_property
+    def widths(self) -> tuple[np.ndarray, np.ndarray]:
+        return _binary_to_flat(self._col(2))
+
+    @cached_property
+    def inits(self) -> tuple[np.ndarray, np.ndarray]:
+        return _binary_to_flat(self._col(3))
+
+    @cached_property
+    def payload(self) -> tuple[np.ndarray, np.ndarray]:
+        return _binary_to_flat(self._col(4))
+
+    @property
+    def inits_u32(self) -> np.ndarray:
+        """The per-block uint32 inits (d1 chain inits, FOR block minima)."""
+        return np.ascontiguousarray(self.inits[0]).view(np.uint32)
+
+    @property
+    def block_args(self) -> tuple:
+        """(n_tok, widths, uint32 inits, payload, payload lengths): the
+        leading arguments of the ``blocks.*_flat`` compressed-domain ops."""
+        return (self.n_tok, self.widths[0], self.inits_u32, *self.payload)
+
+    def by_codec(self, rows: np.ndarray | None = None):
+        """Yield ``(codec name, batch row indices, view)`` per codec among
+        ``rows`` (ascending row indices; every row by default).  When those
+        rows are the whole batch and hold one codec, the view is the batch
+        itself — no copy; otherwise each codec's rows are gathered into a
+        compact view of their own."""
+        n = self.n_tok.size
+        if rows is None:
+            rows = np.arange(n)
+        if rows.size == n and len(self.names) == 1:
+            yield self.names[0], rows, self
+            return
+        per_row = self._col(1).to_numpy(zero_copy_only=False)[rows]
+        for name in np.unique(per_row):
+            sel = rows[per_row == name]
+            sub = object.__new__(_EncodedBatch)
+            sub.n_tok, sub.names = self.n_tok[sel], [str(name)]
+            for part in ("widths", "inits", "payload"):
+                flat, lens = getattr(self, part)
+                setattr(sub, part, (extract_rows(
+                    flat, (np.cumsum(lens) - lens)[sel], lens[sel]),
+                    lens[sel]))
+            yield str(name), sel, sub
+
+    def decode(self) -> tuple[np.ndarray, np.ndarray]:
+        """(flat uint32 tokens in row order, per-row lengths): the decode
+        core of every decode path; wrap with :func:`_list_from_flat` for a
+        tokens list column."""
+        out = np.empty(int(self.n_tok.sum()), dtype=np.uint32)
+        tok_off = np.cumsum(self.n_tok) - self.n_tok
+        for name, sel, sub in self.by_codec():
+            flat = codecs.get(name).decode_flat(
+                sub.n_tok, *sub.widths, *sub.inits, *sub.payload)
+            if sub is self:
+                return flat, self.n_tok
+            out[multi_arange(tok_off[sel], sub.n_tok)] = flat
+        return out, self.n_tok
 
 
 # ---------------------------------------------------------------------------
@@ -199,10 +333,12 @@ def _rows_view(flat: np.ndarray, lens: np.ndarray) -> list[np.ndarray]:
 
 def split_long_rows(df: DataFrame, threshold: int = DEFAULT_SPLIT_THRESHOLD
                     ) -> DataFrame:
-    """Cut rows with n_tok > threshold into (doc_id, seg_id) segments of at
-    most ``threshold`` tokens.  Pure Catalyst expressions — stays in
-    whole-stage codegen, no UDF."""
-    nseg = F.greatest(F.ceil(F.col("n_tok") / threshold).cast("int"), F.lit(1))
+    """Cut rows longer than ``threshold`` tokens into (doc_id, seg_id)
+    segments of at most ``threshold`` tokens.  Lengths come from
+    ``size(tokens)``, so a stale ``n_tok`` column cannot drop tokens.
+    Pure Catalyst expressions — stays in whole-stage codegen, no UDF."""
+    nseg = F.greatest(F.ceil(F.size("tokens") / threshold).cast("int"),
+                      F.lit(1))
     return (
         df.withColumn("seg_id", F.explode(F.sequence(F.lit(0), nseg - 1)))
         .withColumn("tokens", F.slice("tokens",
@@ -223,6 +359,10 @@ def encode(df: DataFrame, codec: str = "auto", shards: int | None = None,
     codec: a registry name, or 'auto' → per-partition cost-model selection
     (north rule).
 
+    ``n_tok`` is recomputed from the tokens: the output always stores each
+    row's true length, and an input ``n_tok`` column is neither trusted
+    nor required.  NULL token rows or elements raise ``ValueError``.
+
     Shuffle discipline (the 100 TB decision): by default the encode is
     NARROW — scan-aligned, zero shuffles — because input task sizing is
     already bounded by ``spark.sql.files.maxPartitionBytes`` and the
@@ -242,43 +382,15 @@ def encode(df: DataFrame, codec: str = "auto", shards: int | None = None,
         df = df.withColumn(
             "_shard", F.pmod(F.xxhash64("doc_id", "seg_id"), F.lit(shards)))
         df = df.repartition(shards, "_shard").drop("_shard")
-    df = df.select("doc_id", "source", "seg_id", "n_tok", "tokens")
+    df = df.select("doc_id", "source", "seg_id", "tokens")
 
-    def encode_fn(it):
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        chosen = None if codec == "auto" else codec
-        total_ns = 0  # cumulative per task; metrics take max() per pid
-        for batch in it:
-            t0 = time.perf_counter_ns()
-            tokens_col = batch.column(4)
-            flat_i32, lens = _list_to_flat(tokens_col)
-            flat = flat_i32.view(np.uint32)
-            if chosen is None:
-                chosen, _costs = choose_codec_flat(flat, lens)
-            n = len(batch)
-            e = codecs.get(chosen).encode_flat(flat, lens)
-            widths_arr = _binary_from_flat(e.widths, e.widths_lens)
-            inits_arr = _binary_from_flat(e.inits, e.inits_lens)
-            payload_arr = _binary_from_flat(e.payload, e.payload_lens)
-            from .kernels import content_hash_flat
-            ch = content_hash_flat(flat, lens)
-            total_ns += time.perf_counter_ns() - t0
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0), batch.column(1),
-                 batch.column(2).cast(pa.int32()),
-                 batch.column(3).cast(pa.int32()),
-                 pa.array([chosen] * n, type=pa.string()),
-                 widths_arr, inits_arr, payload_arr,
-                 pa.array(np.full(n, pid, dtype=np.int32)),
-                 pa.array(np.full(n, total_ns, dtype=np.int64)),
-                 _binary_from_flat(ch, np.full(n, 16, dtype=np.int64))],
-                names=["doc_id", "source", "seg_id", "n_tok", "codec",
-                       "widths", "inits", "payload", "pid", "enc_ns",
-                       "content_hash"])
+    def rows(it):
+        for b in it:
+            yield (b.column(0), b.column(1), b.column(2).cast(pa.int32()),
+                   *_list_to_flat(b.column(3)))
 
-    return df.mapInArrow(encode_fn, schema=ENCODED_SCHEMA)
+    return df.mapInArrow(lambda it: _write_encoded(rows(it), codec),
+                         schema=ENCODED_SCHEMA)
 
 
 def _split_flat(doc_ids, sources, flat, lens, threshold):
@@ -474,12 +586,7 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
     cm = _role_columns(path, ["doc_id", "tokens", "source"])
     cols = [cm["doc_id"], cm["tokens"], cm["source"]]
 
-    def fn(it):
-        from pyspark import TaskContext
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx else -1
-        chosen = None if codec == "auto" else codec
-        total_ns = 0
+    def rows(it):
         for batch in it:
             for path_, rg in zip(batch.column(0).to_pylist(),
                                  batch.column(1).to_pylist()):
@@ -489,36 +596,14 @@ def encode_files(spark: SparkSession, path: str, codec: str = "auto",
                                           row_groups=rgs,
                                           columns=cols):
                     rb = rb.select(cols)  # parquet yields file order
-                    t0 = time.perf_counter_ns()
-                    flat_i32, lens = _list_to_flat(rb.column(1))
-                    flat = flat_i32.view(np.uint32)
-                    doc_ids = rb.column(0)
-                    sources = rb.column(2)
                     doc_ids, sources, seg_ids, flat, lens = _split_flat(
-                        doc_ids, sources, flat, lens, split_threshold)
-                    if chosen is None:
-                        chosen, _ = choose_codec_flat(flat, lens)
-                    e = codecs.get(chosen).encode_flat(flat, lens)
-                    n = lens.size
-                    from .kernels import content_hash_flat
-                    ch = content_hash_flat(flat, lens)
-                    total_ns += time.perf_counter_ns() - t0
-                    yield pa.RecordBatch.from_arrays(
-                        [doc_ids, sources, pa.array(seg_ids, pa.int32()),
-                         pa.array(lens.astype(np.int32)),
-                         pa.array([chosen] * n, type=pa.string()),
-                         _binary_from_flat(e.widths, e.widths_lens),
-                         _binary_from_flat(e.inits, e.inits_lens),
-                         _binary_from_flat(e.payload, e.payload_lens),
-                         pa.array(np.full(n, pid, dtype=np.int32)),
-                         pa.array(np.full(n, total_ns, dtype=np.int64)),
-                         _binary_from_flat(ch,
-                                           np.full(n, 16, dtype=np.int64))],
-                        names=["doc_id", "source", "seg_id", "n_tok",
-                               "codec", "widths", "inits", "payload",
-                               "pid", "enc_ns", "content_hash"])
+                        rb.column(0), rb.column(2),
+                        *_list_to_flat(rb.column(1)), split_threshold)
+                    yield (doc_ids, sources, pa.array(seg_ids, pa.int32()),
+                           flat, lens)
 
-    return fdf.mapInArrow(fn, schema=ENCODED_SCHEMA)
+    return fdf.mapInArrow(lambda it: _write_encoded(rows(it), codec),
+                          schema=ENCODED_SCHEMA)
 
 
 def salt_encoded(df_encoded: DataFrame, shards: int | None = None) -> DataFrame:
@@ -770,12 +855,11 @@ def decode_files(spark: SparkSession, path: str,
                             rb = rb.filter(pa.array(keep))
                     if rb.num_rows == 0:
                         continue
-                    tokens_arr = _decode_batch_columns(
-                        rb.column(3), rb.column(4), rb.column(5),
-                        rb.column(6), rb.column(7))
+                    flat, lens = _EncodedBatch(rb, 3).decode()
                     yield pa.RecordBatch.from_arrays(
                         [rb.column(0), rb.column(1),
-                         rb.column(2).cast(pa.int32()), tokens_arr],
+                         rb.column(2).cast(pa.int32()),
+                         _list_from_flat(flat.view(np.int32), lens)],
                         names=out_names)
 
     return fdf.mapInArrow(fn, schema=out_schema)
@@ -822,53 +906,6 @@ def decode_incremental(spark: SparkSession, path: str,
 # decode
 # ---------------------------------------------------------------------------
 
-def _decode_batch_flat(n_tok_col: pa.Array, codec_col: pa.Array,
-                       widths_col: pa.Array, inits_col: pa.Array,
-                       payload_col: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Decode core returning (flat uint32 tokens in row order, per-row
-    lengths) WITHOUT building an Arrow list array — callers that explode
-    anyway (the roundtrip gates) skip the list build + JVM list
-    deserialization + Generate entirely (guide §4.2)."""
-    n_toks = n_tok_col.to_numpy(zero_copy_only=False).astype(np.int64)
-    names = codec_col.unique().to_pylist()
-    wf, wl = _binary_to_flat(widths_col)
-    inf, il = _binary_to_flat(inits_col)
-    pf, pl = _binary_to_flat(payload_col)
-    if len(names) == 1:
-        out = codecs.get(names[0]).decode_flat(
-            n_toks, wf, wl, inf, il, pf, pl)
-    else:
-        # mixed codecs in one batch (post-shuffle): decode per codec
-        # group via vectorized sub-gathers, scatter into place
-        out = np.empty(int(n_toks.sum()), dtype=np.uint32)
-        tok_off = np.concatenate(([0], np.cumsum(n_toks)))
-        codec_np = codec_col.to_numpy(zero_copy_only=False)
-        w_off = np.concatenate(([0], np.cumsum(wl)))
-        i_off = np.concatenate(([0], np.cumsum(il)))
-        p_off = np.concatenate(([0], np.cumsum(pl)))
-        from .kernels import multi_arange
-        for name in np.unique(codec_np):
-            sel = np.nonzero(codec_np == name)[0]
-            sub = codecs.get(str(name)).decode_flat(
-                n_toks[sel],
-                wf[multi_arange(w_off[sel], wl[sel])], wl[sel],
-                inf[multi_arange(i_off[sel], il[sel])], il[sel],
-                pf[multi_arange(p_off[sel], pl[sel])], pl[sel])
-            out[multi_arange(tok_off[sel], n_toks[sel])] = sub
-    return out, n_toks
-
-
-def _decode_batch_columns(n_tok_col: pa.Array, codec_col: pa.Array,
-                          widths_col: pa.Array, inits_col: pa.Array,
-                          payload_col: pa.Array) -> pa.Array:
-    """Shared decode core: encoded Arrow columns → tokens list<int32> array.
-    Used by both the scan-based :func:`decode` and the fused
-    :func:`decode_files` paths."""
-    out, n_toks = _decode_batch_flat(n_tok_col, codec_col, widths_col,
-                                     inits_col, payload_col)
-    return _list_from_flat(out.view(np.int32), n_toks)
-
-
 def _bare_scan_plan(df: DataFrame) -> bool:
     """True when ``df``'s optimized plan is just projections/filters over
     ONE file relation — i.e. re-executing it costs a column-pruned scan,
@@ -887,9 +924,9 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
     """encoded table → tokens table (doc_id, source, tokens, n_tok).
 
     reassemble=False keeps (doc_id, seg_id, tokens) segments and skips the
-    groupBy shuffle — use when no row exceeded the split threshold.
+    reassembly shuffle — use when no row exceeded the split threshold.
 
-    reassemble=True avoids the groupBy when it can PROVE it is a no-op:
+    reassemble=True avoids the shuffle when it can PROVE it is a no-op:
     if the input is a bare scan (cheap to re-read — never an arbitrary
     subtree), a one-pass probe of (max seg_id, count, distinct doc_ids)
     checks that every doc is a single segment; the reassembly shuffle of
@@ -924,21 +961,19 @@ def decode(df_encoded: DataFrame, reassemble: bool = True) -> DataFrame:
 
     def decode_fn(it):
         for batch in it:
-            tokens_arr = _decode_batch_columns(
-                batch.column(3), batch.column(4), batch.column(5),
-                batch.column(6), batch.column(7))
+            flat, lens = _EncodedBatch(batch, 3).decode()
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1),
-                 batch.column(2).cast(pa.int32()), tokens_arr],
+                 batch.column(2).cast(pa.int32()),
+                 _list_from_flat(flat.view(np.int32), lens)],
                 names=["doc_id", "source", "seg_id", "tokens"])
 
     dec = src.mapInArrow(decode_fn, schema=DECODED_SCHEMA)
     if not reassemble:
         return dec.withColumn("n_tok", F.size("tokens"))
     if single_segment:
-        # provably one segment per doc: row-identical to the groupBy
-        # (each "group" is one row; flatten of one sorted element is the
-        # element) with the array-moving exchange removed
+        # provably one segment per doc: row-identical to the reassembly
+        # (each doc is one segment) with the exchange removed
         return dec.select("doc_id", "source", "tokens") \
             .withColumn("n_tok", F.size("tokens"))
     return _decode_reassembled(src)
@@ -975,9 +1010,7 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
             nrows = batch.num_rows
             if nrows == 0:
                 continue
-            flat, lens = _decode_batch_flat(
-                batch.column(3), batch.column(4), batch.column(5),
-                batch.column(6), batch.column(7))
+            flat, lens = _EncodedBatch(batch, 3).decode()
             ids = batch.column(0)
             # contiguous same-doc runs: boundary where id[i] != id[i-1]
             neq = pc.not_equal(ids.slice(1), ids.slice(0, nrows - 1))
@@ -1021,9 +1054,10 @@ def _decode_reassembled(src: DataFrame) -> DataFrame:
 
 def reassemble_segments(dec: DataFrame) -> DataFrame:
     """(doc_id, seg_id, tokens) segments → whole-document rows, segments
-    concatenated in seg_id order — the groupBy half of :func:`decode`,
-    public for :func:`decode_files` consumers (the fused path returns
-    segments so the shuffle is opt-in)."""
+    concatenated in seg_id order by a decoded-array ``groupBy(doc_id) →
+    array_sort → flatten`` — for :func:`decode_files` consumers (the
+    fused path returns segments so the shuffle is opt-in).
+    :func:`decode` does not use it: it shuffles compressed segments."""
     return (
         dec.groupBy("doc_id")
         .agg(F.first("source").alias("source"),
@@ -1051,51 +1085,36 @@ def point_lookup(df_encoded: DataFrame, index_col: str = "lookup_idx"
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
+            v = _EncodedBatch(batch, 2)
             idxs = batch.column(7).to_numpy(zero_copy_only=False) \
                 .astype(np.int64)
-            w_off = np.cumsum(wl) - wl
-            i_off = np.cumsum(il) - il
-            p_off = np.cumsum(pl) - pl
-            vsel = np.nonzero((idxs >= 0) & (idxs < n_toks))[0]
-            out_val = np.zeros(vsel.size, dtype=np.uint32)
-            pos_of = np.full(n_toks.size, -1, dtype=np.int64)
-            pos_of[vsel] = np.arange(vsel.size)
-            for name in np.unique(codec_np[vsel]) if vsel.size else []:
-                sel = vsel[codec_np[vsel] == name]
-                sub_w = wf[multi_arange(w_off[sel], wl[sel])]
-                sub_i = np.ascontiguousarray(
-                    inf[multi_arange(i_off[sel], il[sel])]).view(np.uint32)
-                sub_p = pf[multi_arange(p_off[sel], pl[sel])]
+            vsel = np.nonzero((idxs >= 0) & (idxs < v.n_tok))[0]
+            val = np.zeros(v.n_tok.size, dtype=np.uint32)
+            for name, sel, sub in v.by_codec(vsel):
                 if name in _BLOCK_MODES:
-                    vals = B.select_flat(n_toks[sel], sub_w, sub_i, sub_p,
-                                         pl[sel], idxs[sel],
-                                         _BLOCK_MODES[name])
+                    val[sel] = blocks.select_flat(*sub.block_args, idxs[sel],
+                                                  _BLOCK_MODES[name])
                 else:
                     # non-block codecs: vectorized decode of just these rows
-                    decoded = codecs.get(str(name)).decode_flat(
-                        n_toks[sel], sub_w, wl[sel], sub_i.view(np.uint8),
-                        il[sel], sub_p, pl[sel])
-                    offs = np.cumsum(n_toks[sel]) - n_toks[sel]
-                    vals = decoded[offs + idxs[sel]]
-                out_val[pos_of[sel]] = vals
+                    flat, lens = sub.decode()
+                    val[sel] = flat[np.cumsum(lens) - lens + idxs[sel]]
             take = pa.array(vsel, type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(take),
                  batch.column(1).take(take).cast(pa.int32()),
                  pa.array(idxs[vsel].astype(np.int32)),
-                 pa.array(out_val.view(np.int32))],
+                 pa.array(val[vsel].view(np.int32))],
                 names=["doc_id", "seg_id", "idx", "val"])
 
     return src.mapInArrow(fn, schema="doc_id string, seg_id int, idx int, val int")
+
+
+def _lower_bound(name: str, v: _EncodedBatch, key: int) -> np.ndarray:
+    """Per-row lower_bound(key) over one codec's SORTED rows (d1 or for)."""
+    search = {"d1": blocks.search_sorted_flat,
+              "for": blocks.search_sorted_for_flat}[name]
+    return search(*v.block_args, key)
 
 
 def search_sorted(df_encoded: DataFrame, key: int) -> DataFrame:
@@ -1111,39 +1130,14 @@ def search_sorted(df_encoded: DataFrame, key: int) -> DataFrame:
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
-        flat_search = {"d1": B.search_sorted_flat,
-                       "for": B.search_sorted_for_flat}
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
-            names = np.unique(codec_np)
-            if names.size == 1:
-                idx = flat_search[str(names[0])](
-                    n_toks, wf, np.ascontiguousarray(inf).view(np.uint32),
-                    pf, pl, key)
-            else:  # mixed d1/for batch (post-shuffle): per-codec sub-gathers
-                idx = np.zeros(n_toks.size, dtype=np.int64)
-                w_off = np.cumsum(wl) - wl
-                i_off = np.cumsum(il) - il
-                p_off = np.cumsum(pl) - pl
-                for name in names:
-                    sel = np.nonzero(codec_np == name)[0]
-                    idx[sel] = flat_search[str(name)](
-                        n_toks[sel],
-                        wf[multi_arange(w_off[sel], wl[sel])],
-                        np.ascontiguousarray(
-                            inf[multi_arange(i_off[sel], il[sel])])
-                        .view(np.uint32),
-                        pf[multi_arange(p_off[sel], pl[sel])], pl[sel], key)
+            v = _EncodedBatch(batch, 2)
+            idx = np.zeros(v.n_tok.size, dtype=np.int64)
+            for name, sel, sub in v.by_codec():
+                idx[sel] = _lower_bound(name, sub, key)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1).cast(pa.int32()),
-                 pa.array(n_toks.astype(np.int32)),
+                 pa.array(v.n_tok.astype(np.int32)),
                  pa.array(idx.astype(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "idx"])
 
@@ -1161,53 +1155,57 @@ def range_count(df_encoded: DataFrame, lo: int, hi: int) -> DataFrame:
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
-        flat_search = {"d1": B.search_sorted_flat,
-                       "for": B.search_sorted_for_flat}
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            names = np.unique(codec_np)
-            bad = [str(n) for n in names if str(n) not in flat_search]
+            v = _EncodedBatch(batch, 2)
+            bad = sorted(set(v.names) - {"d1", "for"})
             if bad:
                 raise ValueError(
                     f"range_count requires a sorted-row family (d1/for), "
                     f"got codec(s) {bad}")
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
-            if names.size == 1:
-                search = flat_search[str(names[0])]
-                inits_u32 = np.ascontiguousarray(inf).view(np.uint32)
-                idx_lo = search(n_toks, wf, inits_u32, pf, pl, lo)
-                idx_hi = search(n_toks, wf, inits_u32, pf, pl, hi)
-            else:  # mixed d1/for batch (post-shuffle): per-codec sub-gathers
-                idx_lo = np.zeros(n_toks.size, dtype=np.int64)
-                idx_hi = np.zeros(n_toks.size, dtype=np.int64)
-                w_off = np.cumsum(wl) - wl
-                i_off = np.cumsum(il) - il
-                p_off = np.cumsum(pl) - pl
-                for name in names:
-                    sel = np.nonzero(codec_np == name)[0]
-                    search = flat_search[str(name)]
-                    n_s = n_toks[sel]
-                    wf_s = wf[multi_arange(w_off[sel], wl[sel])]
-                    in_s = np.ascontiguousarray(
-                        inf[multi_arange(i_off[sel], il[sel])]) \
-                        .view(np.uint32)
-                    pf_s = pf[multi_arange(p_off[sel], pl[sel])]
-                    idx_lo[sel] = search(n_s, wf_s, in_s, pf_s, pl[sel], lo)
-                    idx_hi[sel] = search(n_s, wf_s, in_s, pf_s, pl[sel], hi)
+            n_in = np.zeros(v.n_tok.size, dtype=np.int64)
+            for name, sel, sub in v.by_codec():
+                n_in[sel] = (_lower_bound(name, sub, hi)
+                             - _lower_bound(name, sub, lo))
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1).cast(pa.int32()),
-                 pa.array(n_toks.astype(np.int32)),
-                 pa.array((idx_hi - idx_lo).astype(np.int32))],
+                 pa.array(v.n_tok.astype(np.int32)),
+                 pa.array(n_in.astype(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "n_in_range"])
 
     return src.mapInArrow(
         fn, schema="doc_id string, seg_id int, n_tok int, n_in_range int")
+
+
+def _zones_admit(v: _EncodedBatch, mode: str, probes: np.ndarray
+                 ) -> np.ndarray:
+    """Per row of one block codec's view: does any block's value envelope
+    (from widths + inits alone, see :func:`contains_token`) hold a probe?"""
+    counts = v.widths[1]                     # blocks per row
+    w = v.widths[0].astype(np.int64)
+    span = np.where(w >= 32, np.int64(0xFFFFFFFF), (np.int64(1) << w) - 1)
+    if mode == "plain":
+        lb, ub = np.zeros(w.size, dtype=np.int64), span
+    else:
+        lb = v.inits_u32.astype(np.int64)
+        if mode == "for":
+            ub = np.minimum(lb + span, 0xFFFFFFFF)
+        else:
+            # sorted d1: block b ends at block b+1's init; the row's LAST
+            # block is bounded by its own cumulative-delta span
+            ub = np.empty_like(lb)
+            ub[:-1] = lb[1:]
+            nz = counts > 0
+            last = (np.cumsum(counts) - 1)[nz]
+            blen_last = v.n_tok[nz] - 128 * (counts[nz] - 1)
+            ub[last] = np.minimum(lb[last] + blen_last * span[last],
+                                  0xFFFFFFFF)
+    # block survives iff SOME probe lands in [lb, ub]: one searchsorted
+    # over the sorted probe set per bound, then any() per row
+    blk_ok = (np.searchsorted(probes, lb, side="left")
+              < np.searchsorted(probes, ub, side="right"))
+    ok = np.zeros(counts.size, dtype=bool)
+    ok[np.repeat(np.arange(counts.size), counts)[blk_ok]] = True
+    return ok
 
 
 def contains_token(df_encoded: DataFrame,
@@ -1248,87 +1246,29 @@ def contains_token(df_encoded: DataFrame,
 
     def fn(it):
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf_, il = _binary_to_flat(batch.column(5))
-            cand = n_toks > 0
-            w_off = np.cumsum(wl) - wl
-            i_off = np.cumsum(il) - il
-            for name, mode in _BLOCK_MODES.items():
-                if mode == "d1" and not assume_sorted:
-                    continue            # wrap semantics: no sound bound
-                sel = np.nonzero(cand & (codec_np == name))[0]
-                if sel.size == 0:
-                    continue
-                from .kernels import multi_arange
-                sub_w = wf[multi_arange(w_off[sel], wl[sel])] \
-                    .astype(np.int64)
-                span = np.where(sub_w >= 32, np.int64(0xFFFFFFFF),
-                                (np.int64(1) << sub_w) - 1)
-                if mode in ("for", "d1"):
-                    # inits are uint32 per block: gather the selected
-                    # rows' init bytes and reinterpret
-                    ib = inf_[multi_arange(i_off[sel], il[sel])]
-                    sub_init = np.ascontiguousarray(ib).view(np.uint32) \
-                        .astype(np.int64)
-                    lb = sub_init
-                    if mode == "for":
-                        ub = np.minimum(sub_init + span, 0xFFFFFFFF)
-                    else:
-                        # sorted d1: block b ends at block b+1's init;
-                        # the row's LAST block is bounded by its own
-                        # cumulative-delta span
-                        counts = wl[sel]
-                        b_ends = np.cumsum(counts)
-                        last_idx = b_ends - 1
-                        ub = np.empty_like(sub_init)
-                        ub[:-1] = sub_init[1:]
-                        blen_last = n_toks[sel] - 128 * (counts - 1)
-                        ub[last_idx] = np.minimum(
-                            sub_init[last_idx]
-                            + blen_last * span[last_idx], 0xFFFFFFFF)
-                else:
-                    lb = np.zeros(sub_w.size, dtype=np.int64)
-                    ub = span
-                # block survives iff SOME probe lands in [lb, ub]: one
-                # searchsorted over the sorted probe set per bound
-                blk_ok = (np.searchsorted(probes, lb, side="left")
-                          < np.searchsorted(probes, ub, side="right"))
-                # per-row any() over variable-length block runs
-                ends = np.cumsum(wl[sel])
-                starts = ends - wl[sel]
-                hit = np.add.reduceat(
-                    blk_ok.astype(np.int64),
-                    starts) if blk_ok.size else np.zeros(0, np.int64)
-                # reduceat with repeated/empty offsets is unsafe for
-                # zero-length rows, but sel already excludes n_tok==0
-                # (wl==0 only for empty rows in the block codecs)
-                cand[sel] = hit > 0
-            hits = []
+            v = _EncodedBatch(batch, 2)
+            cand = v.n_tok > 0
+            for name, sel, sub in v.by_codec():
+                mode = _BLOCK_MODES.get(name)
+                if mode is None or (mode == "d1" and not assume_sorted):
+                    continue    # no zone map / d1 wrap semantics: no bound
+                cand[sel] &= _zones_admit(sub, mode, probes)
+            hits = np.zeros(v.n_tok.size, dtype=bool)
             idx = np.nonzero(cand)[0]
             if idx.size:
-                sub = batch.filter(pa.array(cand))
-                toks = _decode_batch_columns(
-                    sub.column(2), sub.column(3), sub.column(4),
-                    sub.column(5), sub.column(6))
-                flat, lens = _list_to_flat(toks)
+                flat, lens = _EncodedBatch(batch.filter(pa.array(cand)),
+                                           2).decode()
                 row_of = np.repeat(np.arange(lens.size), lens)
-                u32 = flat.view(np.uint32)
                 if probes.size == 1 and 0 <= probes[0] <= 0xFFFFFFFF:
                     # dominant single-probe path: straight vectorized
                     # uint32 compare, no int64 widening copy
-                    present = u32 == np.uint32(probes[0])
+                    present = flat == np.uint32(probes[0])
                 else:
-                    vals = u32.astype(np.int64)
+                    vals = flat.astype(np.int64)
                     present = (np.searchsorted(probes, vals, "left")
                                < np.searchsorted(probes, vals, "right"))
-                got = np.unique(row_of[present])
-                hits = idx[got]
-            mask = np.zeros(n_toks.size, dtype=bool)
-            mask[hits] = True
-            out = batch.filter(pa.array(mask))
+                hits[idx[np.unique(row_of[present])]] = True
+            out = batch.filter(pa.array(hits))
             yield pa.RecordBatch.from_arrays(
                 [out.column(0), out.column(1).cast(pa.int32())],
                 names=["doc_id", "seg_id"])
@@ -1349,41 +1289,24 @@ def minmax_sorted(df_encoded: DataFrame) -> DataFrame:
     src = df_encoded.select(*cols)
 
     def fn(it):
-        from . import blocks as B
-        from .kernels import multi_arange
         for batch in it:
-            n_toks = batch.column(2).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            codec_np = batch.column(3).to_numpy(zero_copy_only=False)
-            wf, wl = _binary_to_flat(batch.column(4))
-            inf, il = _binary_to_flat(batch.column(5))
-            pf, pl = _binary_to_flat(batch.column(6))
-            vsel = np.nonzero(n_toks > 0)[0]
-            mn = np.zeros(vsel.size, dtype=np.uint32)
-            mx = np.zeros(vsel.size, dtype=np.uint32)
-            pos_of = np.full(n_toks.size, -1, dtype=np.int64)
-            pos_of[vsel] = np.arange(vsel.size)
-            w_off = np.cumsum(wl) - wl
-            i_off = np.cumsum(il) - il
-            p_off = np.cumsum(pl) - pl
-            for name in np.unique(codec_np[vsel]) if vsel.size else []:
-                sel = vsel[codec_np[vsel] == name]
-                mode = _BLOCK_MODES[str(name)]
-                sub_w = wf[multi_arange(w_off[sel], wl[sel])]
-                sub_i = np.ascontiguousarray(
-                    inf[multi_arange(i_off[sel], il[sel])]).view(np.uint32)
-                sub_p = pf[multi_arange(p_off[sel], pl[sel])]
-                args = (n_toks[sel], sub_w, sub_i, sub_p, pl[sel])
-                mn[pos_of[sel]] = B.select_flat(
-                    *args, np.zeros(sel.size, np.int64), mode)
-                mx[pos_of[sel]] = B.select_flat(
-                    *args, n_toks[sel] - 1, mode)
+            v = _EncodedBatch(batch, 2)
+            vsel = np.nonzero(v.n_tok > 0)[0]
+            mn = np.zeros(v.n_tok.size, dtype=np.uint32)
+            mx = np.zeros(v.n_tok.size, dtype=np.uint32)
+            for name, sel, sub in v.by_codec(vsel):
+                mode = _BLOCK_MODES[name]
+                mn[sel] = blocks.select_flat(
+                    *sub.block_args, np.zeros(sel.size, np.int64), mode)
+                mx[sel] = blocks.select_flat(
+                    *sub.block_args, sub.n_tok - 1, mode)
             take = pa.array(vsel, type=pa.int64())
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0).take(take),
                  batch.column(1).take(take).cast(pa.int32()),
-                 pa.array(n_toks[vsel].astype(np.int32)),
-                 pa.array(mn.view(np.int32)), pa.array(mx.view(np.int32))],
+                 pa.array(v.n_tok[vsel].astype(np.int32)),
+                 pa.array(mn[vsel].view(np.int32)),
+                 pa.array(mx[vsel].view(np.int32))],
                 names=["doc_id", "seg_id", "n_tok", "min_tok", "max_tok"])
 
     return src.mapInArrow(
@@ -1415,27 +1338,16 @@ def intersect_encoded(df_pairs: DataFrame, key_cols: list[str]
                            for f in src.schema.fields[:nk])
 
     def fn(it):
-        from . import blocks as B
         for batch in it:
-            col = {n: batch.column(nk + i) for i, n in enumerate(sides)}
-            bad = set()
-            for s in ("a", "b"):
-                bad |= set(col[f"{s}_codec"].unique().to_pylist()) - {"d1"}
+            a, b = _EncodedBatch(batch, nk), _EncodedBatch(batch, nk + 5)
+            bad = set(a.names) | set(b.names)
+            bad.discard("d1")
             if bad:
                 raise ValueError(
                     f"intersect_encoded: d1-only (sorted zone maps); got "
                     f"codec(s) {sorted(bad)} — re-encode with codec='d1'")
-            args = []
-            for s in ("a", "b"):
-                n_toks = col[f"{s}_n_tok"].to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                wf, _wl = _binary_to_flat(col[f"{s}_widths"])
-                inf_, _il = _binary_to_flat(col[f"{s}_inits"])
-                pf, pl = _binary_to_flat(col[f"{s}_payload"])
-                args += [n_toks, wf,
-                         np.ascontiguousarray(inf_).view(np.uint32),
-                         pf, pl]
-            out_flat, out_lens = B.intersect_sorted_flat(*args)
+            out_flat, out_lens = blocks.intersect_sorted_flat(
+                *a.block_args, *b.block_args)
             yield pa.RecordBatch.from_arrays(
                 [*(batch.column(i) for i in range(nk)),
                  _list_from_flat(out_flat.view(np.int32), out_lens),
@@ -1463,18 +1375,11 @@ def _strong_content_hash(cand: DataFrame) -> DataFrame:
 
     def fn(it):
         for batch in it:
-            tokens_arr = _decode_batch_columns(
-                batch.column(2), batch.column(3), batch.column(4),
-                batch.column(5), batch.column(6))
-            la = tokens_arr.combine_chunks() if isinstance(
-                tokens_arr, pa.ChunkedArray) else tokens_arr
-            offs = la.offsets.to_numpy().astype(np.int64)
-            raw = np.ascontiguousarray(
-                la.values.to_numpy(zero_copy_only=False).astype(
-                    "<i4", copy=False)).tobytes()
-            mv = memoryview(raw)
-            digs = [hashlib.sha256(mv[offs[i] * 4:offs[i + 1] * 4]).digest()
-                    for i in range(len(offs) - 1)]
+            flat, lens = _EncodedBatch(batch, 2).decode()
+            mv = memoryview(flat.astype("<u4", copy=False).tobytes())
+            offs = (np.cumsum(lens) * 4).tolist()
+            digs = [hashlib.sha256(mv[a:b]).digest()
+                    for a, b in zip([0] + offs[:-1], offs)]
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0), batch.column(1),
                  pa.array(digs, type=pa.binary())],

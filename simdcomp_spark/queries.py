@@ -85,8 +85,7 @@ def _flatten_batch(batch):
     helpers, no per-row Python at all."""
     import pyarrow.compute as pc
     import pyarrow as pa_
-    flat_i32, lens = engine._list_to_flat(batch.column(1))
-    flat = flat_i32.view(np.uint32)
+    flat, lens = engine._list_to_flat(batch.column(1))
     starts = np.cumsum(lens) - lens
     uids = pc.cast(batch.column(0), pa_.int64()).to_numpy(
         zero_copy_only=False)
@@ -121,7 +120,7 @@ def _seg_cumsum_u32(vals: np.ndarray, lens: np.ndarray,
 def _decode_exploded(enc: DataFrame, key_name: str) -> DataFrame:
     """Fused decode→explode for the roundtrip gates: one ``mapInArrow``
     yields (key, pos, tok) rows straight from the engine's flat decode
-    core (``engine._decode_batch_flat`` — same mixed-codec routing as
+    core (``engine._EncodedBatch.decode`` — same mixed-codec routing as
     ``engine.decode``), skipping the Arrow list-array build, the JVM
     list deserialization, and the Generate/posexplode over millions of
     rows (guide §4.2).  Row-identical to
@@ -133,9 +132,7 @@ def _decode_exploded(enc: DataFrame, key_name: str) -> DataFrame:
 
     def fn(it):
         for batch in it:
-            flat, lens = engine._decode_batch_flat(
-                batch.column(1), batch.column(2), batch.column(3),
-                batch.column(4), batch.column(5))
+            flat, lens = engine._EncodedBatch(batch, 1).decode()
             uids = pc.cast(batch.column(0), pa_.int64()).to_numpy(
                 zero_copy_only=False)
             starts = np.cumsum(lens) - lens
@@ -233,7 +230,7 @@ def q_auto_roundtrip(spark, sf_dir):
                    F.size("tokens").alias("n_tok"), F.lit("ev").alias("source")))
     # salted post-encode: when auto picks different codecs per partition,
     # the shuffled batches interleave them — keeps the mixed-codec decode
-    # routing (engine._decode_batch_columns) covered by a gate query
+    # routing (engine._EncodedBatch.by_codec) covered by a gate query
     return _roundtrip_exploded(tok, "auto", "user_id", salt=True)
 
 
@@ -245,14 +242,15 @@ def _maxbits_of_widths(enc: DataFrame, key_name: str,
                        out_name: str) -> DataFrame:
     """Per-row max over the encoded per-block widths column — fully
     vectorized: one flat-buffer view + one ``np.maximum.reduceat`` per
-    Arrow batch, no Python loop over rows."""
+    Arrow batch, no Python loop over rows.  Only the widths are read; the
+    reader's leading n_tok/codec columns ride along."""
     import pyarrow as pa_
     import pyarrow.compute as pc
-    src = enc.select("doc_id", "widths")
+    src = enc.select("doc_id", "n_tok", "codec", "widths")
 
     def f(it):
         for batch in it:
-            wf, wl = engine._binary_to_flat(batch.column(1))
+            wf, wl = engine._EncodedBatch(batch, 1).widths
             mb = np.zeros(wl.size, dtype=np.int64)
             nz = wl > 0
             if wf.size:
@@ -450,27 +448,22 @@ def _fastset_shim(enc, mode: str, last_element: bool = False):
     payloads (stored value 0 — each variant's semantics reduce to a zero
     delta/offset write), then ONE blocks.decode_flat for the whole batch.
     Rows are single-block by construction (n_tok ≤ 128).  Arrow-native:
-    the binary columns are viewed as flat buffers (engine._binary_to_flat),
+    the binary columns are viewed as flat buffers (engine._EncodedBatch),
     no per-row bytes materialization."""
     import pyarrow as pa_
     import pyarrow.compute as pc
-    src = enc.select("doc_id", "n_tok", "widths", "inits", "payload")
+    src = enc.select("doc_id", "n_tok", "codec", "widths", "inits",
+                     "payload")
 
     def f(it):
         from . import blocks
         for batch in it:
-            n = batch.column(1).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            wf, _wl = engine._binary_to_flat(batch.column(2))
-            inf, _il = engine._binary_to_flat(batch.column(3))
-            pf, pl = engine._binary_to_flat(batch.column(4))
+            n, wf, inits, pf, pl = engine._EncodedBatch(batch, 1).block_args
             flat = pf.copy()                      # in-place write target
             starts = np.cumsum(pl) - pl
             idxs = (n - 1) if last_element else np.minimum(50, n - 1)
             K.fastset_rows(flat, starts, wf.astype(np.int64),
                            np.zeros(n.size, np.uint64), idxs)
-            inits = (np.ascontiguousarray(inf).view(np.uint32)
-                     if mode != "plain" else np.zeros(0, np.uint32))
             back = blocks.decode_flat(n, wf, inits, flat, pl, mode)
             uids = pc.cast(batch.column(0), pa_.int64()) \
                 .to_numpy(zero_copy_only=False)

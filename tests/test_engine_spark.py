@@ -469,31 +469,81 @@ def test_submit_job_script(spark, unit_df, tmp_path):
     assert _json.loads(lines[1])["roundtrip_mismatches"] == 0
 
 
+class _LocalFrame:
+    """Stand-in for a DataFrame that runs an engine op's Arrow UDF
+    in-process over given batches, so a test can feed batches Spark never
+    produces (columns sliced at a non-zero offset)."""
+
+    def __init__(self, batches):
+        self.batches = batches
+
+    def select(self, *cols):
+        return _LocalFrame([b.select(list(cols)) for b in self.batches])
+
+    def mapInArrow(self, fn, schema):
+        import pyarrow as pa
+        return pa.Table.from_batches(list(fn(iter(self.batches))))
+
+
 def test_range_count_mixed_codec_batches(spark, unit_df):
-    """range_count must route mixed d1/FOR batches per codec group (a
-    post-shuffle encoded table can interleave both sorted-row families)."""
+    """The compressed-domain ops must route mixed d1/FOR batches per codec
+    group (a post-shuffle encoded table can interleave both sorted-row
+    families): range_count, search_sorted, minmax_sorted, point_lookup and
+    contains_token all agree with the raw arrays, on Spark's batches and on
+    a batch whose Arrow columns are sliced (offset != 0)."""
+    import bisect
     sdf = unit_df.where(F.col("n_tok") > 0) \
         .withColumn("tokens", F.array_sort("tokens")) \
         .where(F.array_min("tokens") >= 0)  # signed sort == uint32 sort
-    truth = {r["doc_id"]: sum(2000 <= t < 60000 for t in r["tokens"])
-             for r in sdf.collect()}
+    toks = {r["doc_id"]: r["tokens"] for r in sdf.collect()}
     even = F.xxhash64("doc_id") % 2 == 0
     enc = (engine.encode(sdf.where(even), codec="d1", split_threshold=None)
            .unionByName(engine.encode(sdf.where(~even), codec="for",
                                       split_threshold=None))
-           .repartition(2))
-    rows = engine.range_count(enc, 2000, 60000).collect()
-    assert len(rows) == len(truth)
-    for r in rows:
-        assert r["n_in_range"] == truth[r["doc_id"]], r["doc_id"]
+           .repartition(2)
+           .withColumn("lookup_idx", F.pmod(F.xxhash64("doc_id"),
+                                            F.col("n_tok")).cast("int")))
+    probes = [toks["doc_tokenish_huge_00000000"][35000], 60000]
+
+    def check(frame, want_docs):
+        def by_doc(rows):
+            rows = rows.to_pylist() if hasattr(rows, "to_pylist") else \
+                [r.asDict() for r in rows.collect()]
+            assert len(rows) == len({r["doc_id"] for r in rows})
+            return {r["doc_id"]: r for r in rows}
+
+        rc = by_doc(engine.range_count(frame, 2000, 60000))
+        ss = by_doc(engine.search_sorted(frame, 30000))
+        mm = by_doc(engine.minmax_sorted(frame))
+        pl = by_doc(engine.point_lookup(frame))
+        assert set(rc) == set(ss) == set(mm) == set(pl) == want_docs
+        for d in want_docs:
+            t = toks[d]
+            assert rc[d]["n_in_range"] == sum(2000 <= x < 60000 for x in t), d
+            assert ss[d]["idx"] == bisect.bisect_left(t, 30000), d
+            assert (mm[d]["min_tok"], mm[d]["max_tok"]) == (t[0], t[-1]), d
+            assert pl[d]["val"] == t[pl[d]["idx"]], d
+        for sorted_ in (False, True):
+            got = set(by_doc(engine.contains_token(frame, probes,
+                                                   assume_sorted=sorted_)))
+            assert got == {d for d in want_docs
+                           if set(probes) & set(toks[d])}, sorted_
+
+    check(enc, set(toks))
+    assert enc.select("codec").distinct().count() == 2
+    # one Arrow batch sliced at a non-zero offset, still holding both codecs
+    batch = enc.toArrow().combine_chunks().to_batches()[0]
+    sliced = batch.slice(3, batch.num_rows - 7)
+    assert len(set(sliced.column("codec").to_pylist())) == 2
+    check(_LocalFrame([sliced]), set(sliced.column("doc_id").to_pylist()))
 
 
 def test_salt_encoded_mixed_codec_decode(spark, unit_df):
     """The bench/gate sentinel shape: salt the ENCODED table (compressed
     bytes shuffled, not raw tokens), then decode the shuffled, guaranteed
     mixed-codec batches.  Asserts both that >1 codec is present after the
-    salt (so the per-codec sub-gather routing in _decode_batch_columns is
-    genuinely exercised) and that the round-trip stays bit-identical."""
+    salt (so the per-codec sub-gather routing in _EncodedBatch.by_codec
+    is genuinely exercised) and that the round-trip stays bit-identical."""
     even = F.xxhash64("doc_id") % 2 == 0
     enc = (engine.encode(unit_df.where(even), codec="bitpack",
                          split_threshold=1 << 14)
@@ -607,6 +657,70 @@ def test_list_to_flat_handles_large_list(spark):
     # sliced large_list keeps correct offsets
     flat2, lens2 = engine._list_to_flat(arr.slice(1))
     assert lens2.tolist() == [0, 2] and np.asarray(flat2).tolist() == [4, 5]
+
+
+def _write_tokens_parquet(df, path):
+    """The (doc_id, tokens, source) parquet input of encode_files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import os
+    os.makedirs(path)
+    pq.write_table(pa.Table.from_pylist(
+        [r.asDict() for r in df.select("doc_id", "tokens",
+                                       "source").collect()],
+        pa.schema([("doc_id", pa.string()),
+                   ("tokens", pa.list_(pa.int32())),
+                   ("source", pa.string())])), f"{path}/part-0.parquet")
+
+
+@pytest.mark.parametrize("path", ["encode", "encode_files"])
+@pytest.mark.parametrize("bad", [None, [4, None, 6]],
+                         ids=["null_row", "null_element"])
+def test_encode_rejects_null_tokens(spark, tmp_path, path, bad):
+    """A NULL token row or element must raise at the Arrow boundary, not
+    be encoded as the bits of numpy's float64 NaN conversion (which also
+    corrupted the valid rows of the same batch)."""
+    import pyarrow as pa
+    with pytest.raises(ValueError, match="NULL"):
+        engine._list_to_flat(pa.array([[1, 2, 3], bad],
+                                      pa.list_(pa.int32())))
+    # a slice whose list child holds a NULL outside the slice is valid
+    ok = pa.array([[4, None], [1, 2, 3]], pa.list_(pa.int32())).slice(1)
+    assert engine._list_to_flat(ok)[0].tolist() == [1, 2, 3]
+    df = spark.createDataFrame(
+        [("a", "s", 3, [1, 2, 3]), ("b", "s", 3, bad)],
+        "doc_id string, source string, n_tok int, tokens array<int>")
+    if path == "encode_files":
+        _write_tokens_parquet(df, str(tmp_path / "in"))
+        enc = engine.encode_files(spark, str(tmp_path / "in"),
+                                  codec="bitpack")
+    else:
+        enc = engine.encode(df, codec="bitpack")
+    with pytest.raises(Exception, match="NULL"):
+        enc.collect()
+
+
+@pytest.mark.parametrize("path", ["encode_unsplit", "encode",
+                                  "encode_files"])
+def test_encode_recomputes_lying_n_tok(spark, tmp_path, path):
+    """A caller's n_tok that disagrees with the tokens is not stored (the
+    decode would pad or truncate the row) and cannot make the length
+    split drop tokens: every path round-trips bit-identically."""
+    rows = {"a": [1, 2, 3], "b": [4, 5, 6, 7]}
+    df = spark.createDataFrame(
+        [("a", "s", 5, rows["a"]), ("b", "s", 2, rows["b"])],
+        "doc_id string, source string, n_tok int, tokens array<int>")
+    if path == "encode_files":
+        _write_tokens_parquet(df, str(tmp_path / "in"))
+        enc = engine.encode_files(spark, str(tmp_path / "in"),
+                                  codec="bitpack", split_threshold=2)
+    else:
+        enc = engine.encode(df, codec="bitpack", split_threshold=(
+            None if path == "encode_unsplit" else 2))
+    n_tok = enc.groupBy("doc_id").agg(F.sum("n_tok").alias("n")).collect()
+    assert {r["doc_id"]: r["n"] for r in n_tok} == {"a": 3, "b": 4}
+    dec = engine.decode(enc, reassemble=True)
+    assert {r["doc_id"]: r["tokens"] for r in dec.collect()} == rows
 
 
 def test_encode_files_large_list_parquet(spark, tmp_path):
